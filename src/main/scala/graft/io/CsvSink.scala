@@ -47,8 +47,11 @@ object CsvSink {
       .otherwise(s)
   }
 
-  /** K1: write `df` with exactly `fieldnames` in order to a single CSV. */
-  def writeSingleCsv(df: DataFrame, fieldnames: Seq[String], target: String): Unit = {
+  /** K1: write `df` with exactly `fieldnames` in order to a single CSV.
+    * Returns whether any row was written. With `skipEmpty`, a frame with
+    * no rows leaves no file at all, not even the header (K3). */
+  def writeSingleCsv(df: DataFrame, fieldnames: Seq[String], target: String,
+      skipEmpty: Boolean = false): Boolean = {
     val tmp = Files.createTempDirectory("graft_csv")
     df.select(fieldnames.map(col): _*)
       .write.mode("overwrite").option("header", "false")
@@ -60,7 +63,7 @@ object CsvSink {
       .option("ignoreLeadingWhiteSpace", "false")
       .option("ignoreTrailingWhiteSpace", "false")
       .csv(tmp.toString)
-    concatParts(tmp, fieldnames, target)
+    concatParts(tmp, fieldnames, target, skipEmpty)
   }
 
   /** K1, long-format fast path: `lines` is ONE string column of fully
@@ -72,28 +75,34 @@ object CsvSink {
       target: String): Unit = {
     val tmp = Files.createTempDirectory("graft_csv")
     lines.write.mode("overwrite").text(tmp.toString)
-    concatParts(tmp, fieldnames, target)
+    concatParts(tmp, fieldnames, target, skipEmpty = false)
   }
 
-  /** stream the sorted part files into `target` behind the header line */
+  /** stream the sorted part files into `target` behind the header line;
+    * every written row ends in a line break, so the frame had rows iff
+    * some part file is non-empty */
   private def concatParts(tmp: Path, fieldnames: Seq[String],
-      target: String): Unit = {
+      target: String, skipEmpty: Boolean): Boolean = {
     val partStream = Files.list(tmp)
     val parts =
       try partStream.iterator().asScala
         .filter(_.getFileName.toString.startsWith("part-"))
         .toSeq.sortBy(_.getFileName.toString)
       finally partStream.close()
-    val dest = Paths.get(target)
-    if (dest.getParent != null) Files.createDirectories(dest.getParent)
-    val out = Files.newOutputStream(dest, StandardOpenOption.CREATE,
-      StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
-    try {
-      out.write((fieldnames.map(csvCell).mkString(",") + "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      parts.foreach(p => Files.copy(p, out))
-    } finally out.close()
+    val any = parts.exists(Files.size(_) > 0)
+    if (any || !skipEmpty) {
+      val dest = Paths.get(target)
+      if (dest.getParent != null) Files.createDirectories(dest.getParent)
+      val out = Files.newOutputStream(dest, StandardOpenOption.CREATE,
+        StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
+      try {
+        out.write((fieldnames.map(csvCell).mkString(",") + "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        parts.foreach(p => Files.copy(p, out))
+      } finally out.close()
+    }
     deleteRecursively(tmp)
+    any
   }
 
   private def deleteRecursively(root: Path): Unit = {

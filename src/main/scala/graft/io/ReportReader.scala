@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.schema.ReportSchema
 
 /** Report scans (reference S1–S3).
@@ -9,7 +10,8 @@ import graft.schema.ReportSchema
   * Where the reference loops over files opening each with `csv.DictReader`
   * (`bigbugdata.py:248–254`), we issue ONE distributed scan over all paths
   * and recover the per-file sample ID from `input_file_name()` — at cluster
-  * scale each file (or file split) becomes a task; no driver-side loop.
+  * scale each file (or file split) becomes a task. The driver only lists
+  * the files the caller named ([[listedOnDriver]]); it never reads rows.
   */
 object ReportReader {
 
@@ -62,13 +64,16 @@ object ReportReader {
       ReportSchema.schema.fields.map(f =>
         org.apache.spark.sql.types.StructField(f.name,
           org.apache.spark.sql.types.StringType)))
-    spark.read
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("comment", "#")
-      .option("mode", "PERMISSIVE")
-      .schema(rawSchema)
-      .csv(paths: _*)
+    val scan = listedOnDriver(spark) {
+      spark.read
+        .option("sep", "\t")
+        .option("header", "true")
+        .option("comment", "#")
+        .option("mode", "PERMISSIVE")
+        .schema(rawSchema)
+        .csv(paths: _*)
+    }
+    scan
       .select(ReportSchema.schema.fields.flatMap { f =>
         Seq(col(f.name).try_cast(f.dataType).as(f.name),
           col(f.name).as(s"$RawPrefix${f.name}"))
@@ -78,6 +83,23 @@ object ReportReader {
       .withColumn(BlockStart, input_file_block_start())
       .withColumn(ArgIdx, idxExpr)
       .withColumn(OrderKey, struct(col(ArgIdx), col(BlockStart), col(RowId)))
+  }
+
+  /** Run `read` with its file listing on the driver. Spark lists a
+    * read's paths in a distributed job, one task per path, once there
+    * are more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32 by default) of them; for a batch of named report files that job
+    * only re-stats what the caller already named. The threshold is lifted
+    * for this call only: Spark builds the file index eagerly inside
+    * `.csv(...)`, so the frame's later jobs never list again. The
+    * session's own setting comes back afterwards, also when `read`
+    * throws. */
+  def listedOnDriver[T](spark: SparkSession)(read: => T): T = {
+    val key = SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key
+    val explicit = spark.sessionState.conf.getAllConfs.get(key)
+    spark.conf.set(key, Int.MaxValue.toLong)
+    try read
+    finally explicit.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** F5: sample ID = basename minus everything after the LAST underscore

@@ -26,15 +26,10 @@ object FilterOps {
   /** K3: the filter scripts' stdout-CSV contract — header + rows when any
     * row matched, NOTHING at all when none did
     * (`filter_rrpm_by_taxid.py:33–36`: the writer is never constructed
-    * for an empty result). */
-  def writeFilteredCsv(df: DataFrame, target: String): Boolean = {
-    val cached = df.cache() // one upstream execution for the probe + write
-    try {
-      val any = !cached.isEmpty
-      if (any) graft.io.CsvSink.writeSingleCsv(cached, df.columns.toSeq, target)
-      any
-    } finally cached.unpersist()
-  }
+    * for an empty result). The sink's part files answer "did anything
+    * match": the frame runs once, with no emptiness probe before it. */
+  def writeFilteredCsv(df: DataFrame, target: String): Boolean =
+    graft.io.CsvSink.writeSingleCsv(df, df.columns.toSeq, target, skipEmpty = true)
 
   /** K3, stdout channel: the reference writes the filtered CSV to STDOUT
     * (`filter_rrpm_by_taxid.py:33–36` — "where it can be directed into a
@@ -42,19 +37,15 @@ object FilterOps {
     * the same single-CSV sink so quoting/stringification stay identical,
     * then streamed to `out`. Returns true iff anything was emitted. */
   def printFilteredCsv(df: DataFrame, out: java.io.PrintStream = System.out): Boolean = {
-    val cached = df.cache()
+    val tmp = java.nio.file.Files.createTempFile("graft_k3_stdout", ".csv")
     try {
-      val any = !cached.isEmpty
+      val any = writeFilteredCsv(df, tmp.toString)
       if (any) {
-        val tmp = java.nio.file.Files.createTempFile("graft_k3_stdout", ".csv")
-        try {
-          graft.io.CsvSink.writeSingleCsv(cached, df.columns.toSeq, tmp.toString)
-          val lines = java.nio.file.Files.lines(tmp)
-          try lines.forEach(l => out.println(l)) finally lines.close()
-        } finally java.nio.file.Files.deleteIfExists(tmp)
+        val lines = java.nio.file.Files.lines(tmp)
+        try lines.forEach(l => out.println(l)) finally lines.close()
       }
       any
-    } finally cached.unpersist()
+    } finally java.nio.file.Files.deleteIfExists(tmp)
   }
 
   /** `filter_reports_by_taxid.py`: same filter over a folder of reports,
@@ -73,12 +64,13 @@ object FilterOps {
       graft.schema.ReportSchema.schema.fieldNames.map(n =>
         org.apache.spark.sql.types.StructField(n,
           org.apache.spark.sql.types.StringType)))
-    val reports = spark.read
-      .option("sep", "\t").option("header", "true").option("comment", "#")
-      .schema(rawSchema)
-      .csv(reportsGlob)
-      .withColumn("sampleName",
-        graft.io.ReportReader.sampleIdFirstToken(input_file_name()))
+    val reports = graft.io.ReportReader.listedOnDriver(spark) {
+      spark.read
+        .option("sep", "\t").option("header", "true").option("comment", "#")
+        .schema(rawSchema)
+        .csv(reportsGlob)
+    }.withColumn("sampleName",
+      graft.io.ReportReader.sampleIdFirstToken(input_file_name()))
     filterByTaxids(reports, taxids)
       .select(col("sampleName") +: graft.schema.ReportSchema.schema.fieldNames
         .map(col).toSeq: _*)

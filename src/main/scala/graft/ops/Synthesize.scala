@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.schema.ReportSchema
 
 /** Report synthesis (reference `scripts/modify_reports.py`): given
@@ -83,8 +84,13 @@ object Synthesize {
     * samples × species-rows must fit driver memory — faithful to the
     * reference's regime (per-sample report TSVs are tiny by
     * construction: thousands of taxa rows each, a few KB–MB per file).
-    * If a deployment ever needs K4 at data scale, the shape to switch
-    * to is one `foreachPartition` writer per sample after a
+    * Since the rows are on the driver anyway, they are put in file order
+    * there too (by [[graft.io.ReportReader.OrderKey]]), not by a cluster
+    * sort that would cost a range-sampling job and a shuffle. The input
+    * feeds both the per-sample sums and that collect, so it is persisted
+    * for the duration of the call and the batch is scanned once. If a
+    * deployment ever needs K4 at data scale, the shape to switch to is
+    * one `foreachPartition` writer per sample after a
     * `repartition(sample)` — kept out deliberately: this sink's
     * contract is byte-exact tiny TSVs, and the reference tool it
     * mirrors is itself a driver-style script.
@@ -93,8 +99,6 @@ object Synthesize {
       totals: DataFrame, outputDir: String,
       clock: () => java.util.Date = () => new java.util.Date): Seq[String] = {
     Files.createDirectories(Paths.get(outputDir))
-    val stats = classifiedStats(speciesReports)
-    val synth = syntheticRows(stats, totals).cache()
     val fmt = new java.text.SimpleDateFormat("EEE MMM dd HH:mm:ss yyyy",
       java.util.Locale.US)
     val ts = fmt.format(clock())
@@ -107,12 +111,24 @@ object Synthesize {
       val raw = s"${graft.io.ReportReader.RawPrefix}$n"
       if (speciesReports.columns.contains(raw)) col(raw).as(n) else col(n)
     }
-    val species = speciesReports.filter(col(ReportSchema.Rank) === "species")
-      .orderBy(col(graft.io.ReportReader.OrderKey))
-      .select((rawFirst :+ col("sample")).toSeq: _*)
-      .collect()
-      .groupBy(_.getAs[String]("sample"))
-    val synthRows = synth.collect().groupBy(_.getAs[String]("sample"))
+    // a frame the caller already cached stays cached after the call
+    val owned = speciesReports.storageLevel == StorageLevel.NONE
+    val input = if (owned) speciesReports.persist() else speciesReports
+    val (species, synthRows) =
+      try {
+        val synthRows = syntheticRows(classifiedStats(input), totals).collect()
+          .groupBy(_.getAs[String]("sample"))
+        val species = input.filter(col(ReportSchema.Rank) === "species")
+          .select((rawFirst :+ col("sample") :+
+            col(graft.io.ReportReader.OrderKey)).toSeq: _*)
+          .collect()
+          .sortBy { r =>
+            val k = r.getStruct(r.fieldIndex(graft.io.ReportReader.OrderKey))
+            (k.getInt(0), k.getLong(1), k.getLong(2))
+          }
+          .groupBy(_.getAs[String]("sample"))
+        (species, synthRows)
+      } finally if (owned) input.unpersist()
     val missing = species.keySet -- synthRows.keySet
     missing.toSeq.sorted.foreach(s =>
       System.err.println(s"Warning: No total reads data found for sample $s"))

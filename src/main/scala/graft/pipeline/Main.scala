@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI-equivalent of the reference's `bigbugdata` entry point
   * (`bigbugdata.py:369–429`):
   *
@@ -53,15 +51,15 @@ object Main {
     }
     require(reports.nonEmpty, "-r/--reports is required")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+    val spark = graft.SparkEnv.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("bigbugdata-spark")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions default to the task slots; SPARK_GRAFT_CPUS overrides
+    spark.conf.set("spark.sql.shuffle.partitions", sys.env.getOrElse(
+      "SPARK_GRAFT_CPUS", spark.sparkContext.defaultParallelism.toString))
     try {
       val o = BigBugData.write(spark,
         BigBugData.Params(reports, out, rank, k, groups, nativeTopK))

@@ -1,14 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     // args: <name[,name...]> [sfDir]   (default sf0.01)
     // SPARK_GRAFT_CONF=k=v[,k=v] passes session confs (same knob as
-    // BenchOne) — e.g. spark.graft.scan.parallelizeMinBytes=<huge> to
-    // print the pre-optimization plan of a query for an A/B plan diff.
+    // BenchOne) — e.g. spark.graft.scan.parallelizeMinBytes=0 to print
+    // the plan with the opt-in scan repartition on (it is off by
+    // default) for an A/B plan diff against the default plan.
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkEnv.builder(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -96,6 +96,61 @@ class OpsSpec extends SparkSuite {
     assert(lines.get(3).contains("\troot\t"))
   }
 
+  test("synthesize: species rows echo in file order into their own " +
+      "sample's TSV when a file splits across tasks, and nothing stays " +
+      "persisted") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft_synth_order")
+    val header = "%\treads\ttaxReads\tkmers\tdup\tcov\ttaxID\trank\ttaxName\n"
+    // BIG is several 64 KiB splits long; its species rows are interleaved
+    // with genus rows, and their taxIDs fall as the file goes on, so a
+    // sort by taxID cannot pass for file order
+    def report(sample: String, n: Int): (String, Seq[String]) = {
+      val lines = (0 until n).map { i =>
+        val rank = if (i % 7 == 3) "genus" else "species"
+        s"0.10\t${i + 1}\t${i + 1}\t90\t1.50\t0.25\t${100000 - i}\t$rank\t" +
+          s"$sample-taxon-$i-padpadpadpad"
+      }
+      val f = dir.resolve(s"${sample}_L1_report.tsv")
+      Files.writeString(f, header + lines.mkString("", "\n", "\n"))
+      f.toString -> lines.filter(_.contains("\tspecies\t"))
+    }
+    // argument order differs from name order
+    val inputs = Seq(report("C", 40), report("BIG", 3000), report("A", 25))
+    Files.writeString(dir.resolve("d.tsv"),
+      "A_L1_x\ty\t100000\nBIG_L1_x\ty\t9000000\nC_L1_x\ty\t100000\n")
+    Files.writeString(dir.resolve("r.tsv"), "ZZ_x\ty\t5\n")
+    val saved = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    val savedCost = spark.conf.get("spark.sql.files.openCostInBytes")
+    val written = try {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", 65536L)
+      spark.conf.set("spark.sql.files.openCostInBytes", 0L)
+      val species = ReportReader.readReports(spark, inputs.map(_._1))
+      val splits = species.filter(col("sample") === "BIG_L1")
+        .select(ReportReader.BlockStart).distinct().count()
+      assert(splits >= 3, s"BIG must split across tasks, got $splits")
+      val totals = Synthesize.totalReads(spark,
+        dir.resolve("d.tsv").toString, dir.resolve("r.tsv").toString)
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val out = Files.createTempDirectory("graft_synth_order_out").toString
+      val w = Synthesize.writeCompleteReports(spark, species, totals, out)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted),
+        "writeCompleteReports must unpersist what it persisted")
+      w
+    } finally {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", saved)
+      spark.conf.set("spark.sql.files.openCostInBytes", savedCost)
+    }
+    assert(written.map(p => Paths.get(p).getFileName.toString) ==
+      Seq("A", "BIG", "C").map(s => s"${s}_L1_species-level-report.tsv"))
+    Seq("A", "BIG", "C").zip(written).foreach { case (sample, path) =>
+      val expected = inputs.find(_._1.contains(s"/${sample}_L1_")).get._2
+      // 3 header lines, then unclassified and root, then the species rows
+      val got = Files.readAllLines(Paths.get(path)).asScala.drop(5).toSeq
+      assert(got == expected, s"$sample: species rows out of file order")
+    }
+  }
+
   test("filterByTaxids: string-keyed semi join (J4/P6)") {
     val dir = Files.createTempDirectory("graft_taxids")
     Files.writeString(dir.resolve("taxids.csv"), "taxID,name\n10,a\n30,c\n")
@@ -106,6 +161,26 @@ class OpsSpec extends SparkSuite {
       .collect().map(_.getAs[Long]("taxID")).sorted
     assert(got.toSeq == Seq(10L, 30L))
   }
+
+  /** the sinks' temporary files and directories currently on disk */
+  private def sinkTemps(): Set[String] = {
+    val ls = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith("graft_csv") || n.startsWith("graft_k3")).toSet
+    finally ls.close()
+  }
+
+  /** 40 rows in 8 hash partitions: `g = 2` keeps 8 rows that all sit in
+    * ONE partition, in input order; `g = 7` keeps nothing */
+  private def eightPartitions = {
+    import org.apache.spark.sql.functions.col
+    val f = spark.range(0, 40, 1, 1).withColumn("g", col("id") % 5)
+      .repartition(8, col("g"))
+    assert(f.rdd.getNumPartitions == 8)
+    f
+  }
+  private val onePartitionCsv =
+    "id,g\n" + (2 until 40 by 5).map(i => s"$i,2\n").mkString
 
   test("writeFilteredCsv: empty result writes nothing at all (K3)") {
     import spark.implicits._
@@ -118,6 +193,16 @@ class OpsSpec extends SparkSuite {
       s"$dir/none.csv"))
     assert(!Files.exists(dir.resolve("none.csv")),
       "empty filter result must not produce a file (not even a header)")
+    // 8 partitions, 7 of them empty: the header plus the rows, in order
+    assert(FilterOps.writeFilteredCsv(eightPartitions.filter("g = 2"),
+      s"$dir/one.csv"))
+    assert(Files.readString(dir.resolve("one.csv")) == onePartitionCsv)
+    // 8 partitions, no match: no file, and no temp directory left over
+    val temps = sinkTemps()
+    assert(!FilterOps.writeFilteredCsv(eightPartitions.filter("g = 7"),
+      s"$dir/none8.csv"))
+    assert(!Files.exists(dir.resolve("none8.csv")))
+    assert(sinkTemps() == temps, "the sink must remove its temp directory")
   }
 
   test("printFilteredCsv: stdout channel emits header+rows, or nothing (K3)") {
@@ -132,6 +217,17 @@ class OpsSpec extends SparkSuite {
       df.filter(org.apache.spark.sql.functions.col("taxID") === 999),
       new java.io.PrintStream(empty, true, "UTF-8")))
     assert(empty.size() == 0, "empty result must emit nothing, not even a header")
+    // the same two 8-partition inputs as the file channel
+    val one = new java.io.ByteArrayOutputStream()
+    assert(FilterOps.printFilteredCsv(eightPartitions.filter("g = 2"),
+      new java.io.PrintStream(one, true, "UTF-8")))
+    assert(one.toString("UTF-8") == onePartitionCsv)
+    val temps = sinkTemps()
+    val none = new java.io.ByteArrayOutputStream()
+    assert(!FilterOps.printFilteredCsv(eightPartitions.filter("g = 7"),
+      new java.io.PrintStream(none, true, "UTF-8")))
+    assert(none.size() == 0)
+    assert(sinkTemps() == temps, "the sink must remove its temp files")
   }
 
   test("CLI -v/--version prints the version and exits cleanly") {

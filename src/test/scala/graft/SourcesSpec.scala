@@ -112,4 +112,60 @@ class SourcesSpec extends SparkSuite {
       spark.conf.set("spark.sql.files.openCostInBytes", savedCost)
     }
   }
+
+  test("report reads list their named files on the driver: no Spark job " +
+      "while the frame is built, and the listing threshold is restored") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.io.ReportReader
+    import graft.ops.FilterOps
+    val s2 = spark; import s2.implicits._
+    // 40 named files: above Spark's default parallel-listing threshold of
+    // 32 paths, past which the parent code listed them in a 40-task job
+    val dir = Files.createTempDirectory("graft_listing")
+    val paths = (0 until 40).map { i =>
+      val f = dir.resolve(s"S${i}_L1_species-level-report.tsv")
+      Files.writeString(f,
+        "%\treads\ttaxReads\tkmers\tdup\tcov\ttaxID\trank\ttaxName\n" +
+          s"0.1\t$i\t$i\t9\t1.0\t0.5\t10\tspecies\tEcoli\n")
+      f.toString
+    }
+    val glob = s"$dir/*_species-level-report.tsv"
+    val taxids = Seq("10").toDF("taxID")
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val threshold = spark.conf.get(key)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    /** the frame `build` returns, and the jobs Spark ran to build it */
+    def jobsWhile[T](build: => T): (T, Int) = {
+      ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val built = build
+      ListenerBusDrain(spark.sparkContext)
+      (built, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (reports, readJobs) =
+        jobsWhile(ReportReader.readReports(spark, paths))
+      assert(readJobs == 0)
+      assert(spark.conf.get(key) == threshold)
+      val (filtered, filterJobs) =
+        jobsWhile(FilterOps.filterReportsByTaxids(spark, glob, taxids))
+      assert(filterJobs == 0)
+      assert(spark.conf.get(key) == threshold)
+      // the frames still cover every file
+      assert(reports.select(ReportReader.ArgIdx).distinct().count() == 40)
+      assert(filtered.count() == 40)
+      intercept[org.apache.spark.sql.AnalysisException](
+        ReportReader.readReports(spark, paths :+ s"$dir/gone_L1_report.tsv"))
+      assert(spark.conf.get(key) == threshold)
+      intercept[org.apache.spark.sql.AnalysisException](
+        FilterOps.filterReportsByTaxids(spark, s"$dir/none/*.tsv", taxids))
+      assert(spark.conf.get(key) == threshold)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
