@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEnv.cpus
     // local-analysis escape hatch ONLY (the driver never sets it): at
     // extra scale points a documented scale-killer (e8's didactic C=16,
     // alpha ~2 by design) would dominate hours of wall clock without
@@ -27,9 +27,15 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm-up at the smallest scale factor: pays JVM/codegen/analysis
-    // costs once so the timed runs below measure steady-state execution,
-    // which is what matters for cluster-scale throughput.
+    // Warm-up at the smallest scale factor: loads and JIT-compiles the
+    // engine's own code paths and Spark's, and fills the generated-code
+    // cache (sized in SparkEnv to hold a full pass) with every class
+    // whose source does not depend on the scale. Measured at sf0.01:
+    // timed pass 1 still compiles ~100 classes and pass 2 ~50-110, the
+    // latter from a few queries whose generated source differs on every
+    // run. A query that fails here is recorded in the artifact's
+    // `warmup_failed`: it usually fails in the timed passes too, and
+    // where it does not, its pass-1 time includes the warm-up it missed.
     val warmDir = "/root/testdata/sf0.001"
     // Materialize through the noop sink, not count(): count() lets Catalyst
     // prune every projected expression and drop final sorts, so
@@ -38,8 +44,12 @@ object Bench {
     // (real work) while writing nothing.
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
+    val warmupFailed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      try { materialize(fn(spark, warmDir)); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $name FAILED: $e")
+        Some(name)
+      }
     }
     spark.catalog.clearCache() // warm-up caches must not occupy storage
     // Staging pre-pass AT the bench scale: fixture/memo construction
@@ -188,6 +198,8 @@ object Bench {
     // require these coincide, but the artifact should state what ran
     val skippedJson = SparkEntry.queries.keys.filter(skip).toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val warmupFailedJson = warmupFailed.sorted.map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
     val env = {
       val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       // heap matters as much as load: an undersized pool inflates the
@@ -203,7 +215,7 @@ object Bench {
         s""""epoch_ms":${System.currentTimeMillis()}}"""
     }
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"failed":$failedJson,"skipped":$skippedJson,"sf":"$sfDir","env":$env}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passes,"failed":$failedJson,"skipped":$skippedJson,"warmup_failed":$warmupFailedJson,"sf":"$sfDir","env":$env}"""
     // The driver captures only a TAIL of stdout: with 75+ queries the
     // single JSON line grows past the capture window and the leading
     // "value" is lost (round-3 BENCH artifact had parsed:null). Persist

@@ -27,7 +27,7 @@ object Verify {
     require(only.subsetOf(SparkEntry.queries.keySet),
       s"unknown query names: " +
         (only -- SparkEntry.queries.keySet).toSeq.sorted.mkString(", "))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEnv.cpus
     // SparkEnv resolves the SPARK_GRAFT_MASTER/_JARS overrides for the
     // cross-executor gate (CORRECTNESS_CLUSTER.md)
     val spark = SparkEnv.builder(s"local[$cpus]")

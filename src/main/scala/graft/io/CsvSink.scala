@@ -49,11 +49,13 @@ object CsvSink {
 
   /** K1: write `df` with exactly `fieldnames` in order to a single CSV.
     * Returns whether any row was written. With `skipEmpty`, a frame with
-    * no rows leaves no file at all, not even the header (K3). */
+    * no rows leaves no file at all, not even the header (K3). Field names
+    * are column names verbatim (sample ids such as `S.1` or ``a`b``), not
+    * SQL identifiers to parse. */
   def writeSingleCsv(df: DataFrame, fieldnames: Seq[String], target: String,
       skipEmpty: Boolean = false): Boolean = {
     val tmp = Files.createTempDirectory("graft_csv")
-    df.select(fieldnames.map(col): _*)
+    df.select(fieldnames.map(n => col("`" + n.replace("`", "``") + "`")): _*)
       .write.mode("overwrite").option("header", "false")
       // Spark's CSV writer TRIMS cell whitespace by default; the
       // reference's csv.DictWriter emits values verbatim (`  name  `

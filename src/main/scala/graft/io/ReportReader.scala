@@ -9,9 +9,10 @@ import graft.schema.ReportSchema
   *
   * Where the reference loops over files opening each with `csv.DictReader`
   * (`bigbugdata.py:248–254`), we issue ONE distributed scan over all paths
-  * and recover the per-file sample ID from `input_file_name()` — at cluster
-  * scale each file (or file split) becomes a task. The driver only lists
-  * the files the caller named ([[listedOnDriver]]); it never reads rows.
+  * and recover the per-file sample ID from the row's file name
+  * ([[fileName]]) — at cluster scale each file (or file split) becomes a
+  * task. The driver only lists the files the caller named
+  * ([[listedOnDriver]]); it never reads rows.
   */
 object ReportReader {
 
@@ -78,7 +79,7 @@ object ReportReader {
         Seq(col(f.name).try_cast(f.dataType).as(f.name),
           col(f.name).as(s"$RawPrefix${f.name}"))
       }.toSeq: _*)
-      .withColumn(ReportSchema.Sample, sampleIdLastUnderscore(input_file_name()))
+      .withColumn(ReportSchema.Sample, sampleIdLastUnderscore(fileName))
       .withColumn(RowId, monotonically_increasing_id())
       .withColumn(BlockStart, input_file_block_start())
       .withColumn(ArgIdx, idxExpr)
@@ -100,6 +101,19 @@ object ReportReader {
     spark.conf.set(key, Int.MaxValue.toLong)
     try read
     finally explicit.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Base name of the row's file, as the caller spelled it.
+    * `input_file_name()` (and `_metadata.file_name`) hold the file's URI,
+    * percent-encoded (`Sample 1_report.tsv` → `Sample%201_report.tsv`),
+    * so ids taken from them raw disagree with the driver-side
+    * [[sampleIdOf]]. `URI.getPath` undoes exactly that encoding; SQL's
+    * `url_decode` would not, since it also reads `+` as a space. */
+  def fileName: Column = decodedBaseName(input_file_name())
+
+  private val decodedBaseName = udf { (uri: String) =>
+    val path = if (uri == null || uri.isEmpty) "" else new java.net.URI(uri).getPath
+    path.substring(path.lastIndexOf('/') + 1)
   }
 
   /** F5: sample ID = basename minus everything after the LAST underscore

@@ -70,7 +70,7 @@ object FilterOps {
         .schema(rawSchema)
         .csv(reportsGlob)
     }.withColumn("sampleName",
-      graft.io.ReportReader.sampleIdFirstToken(input_file_name()))
+      graft.io.ReportReader.sampleIdFirstToken(graft.io.ReportReader.fileName))
     filterByTaxids(reports, taxids)
       .select(col("sampleName") +: graft.schema.ReportSchema.schema.fieldNames
         .map(col).toSeq: _*)

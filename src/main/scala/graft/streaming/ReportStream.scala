@@ -24,7 +24,7 @@ object ReportStream {
       .schema(ReportSchema.schema)
       .csv(s"$dir/*.tsv")
       .withColumn(ReportSchema.Sample,
-        ReportReader.sampleIdLastUnderscore(input_file_name()))
+        ReportReader.sampleIdLastUnderscore(ReportReader.fileName))
 
   /** incremental A1: per-sample totals (taxID 0/1 rows) */
   def runningTotals(reports: DataFrame): DataFrame =

@@ -1,10 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object E8Probe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkEnv.builder(s"local[${SparkEnv.cpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEnv.cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // "64" = literal-centroid path; "k64" = kernel path (two-level since

@@ -7,7 +7,7 @@ object Explain {
     // the plan with the opt-in scan repartition on (it is off by
     // default) for an A/B plan diff against the default plan.
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEnv.cpus
     val spark = SparkEnv.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

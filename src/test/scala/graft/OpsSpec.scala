@@ -263,6 +263,21 @@ class OpsSpec extends SparkSuite {
     assert(got.head.getAs[String]("taxID") == "10")
   }
 
+  test("filterReportsByTaxids: sampleName is the file name as spelled, " +
+      "not its percent-encoded URI (F6)") {
+    val dir = Files.createTempDirectory("graft_frep_enc")
+    for (name <- Seq("Pat 7_x", "p%2_y", "a+b_z"))
+      Files.writeString(dir.resolve(s"${name}_species-level-report.tsv"),
+        "%\treads\ttaxReads\tkmers\tdup\tcov\ttaxID\trank\ttaxName\n" +
+          "0.1\t30\t30\t300\t1.0\t0.5\t10\tspecies\tEcoli\n")
+    Files.writeString(dir.resolve("taxids.csv"), "taxID\n10\n")
+    val got = FilterOps.filterReportsByTaxids(spark,
+      s"$dir/*_species-level-report.tsv",
+      FilterOps.readTaxids(spark, dir.resolve("taxids.csv").toString))
+      .collect().map(_.getAs[String]("sampleName")).sorted.toSeq
+    assert(got == Seq("Pat 7", "a+b", "p%2"))
+  }
+
   test("writeSingleCsv: pathological header names (quote, comma, " +
       "backslash) match Spark's own CSV writer byte-for-byte") {
     val s2 = spark; import s2.implicits._

@@ -252,6 +252,73 @@ class PipelineSpec extends SparkSuite {
       "sampleName,taxID,taxName,rank,rRPM,kmers,dup,reads,cov,e_val,z_score")
   }
 
+  /** one report per sample id, each with totals and one species row,
+    * named `<id>_report.tsv`; runs the pipeline into a fresh directory and
+    * returns it */
+  private def writeBatch(ids: Seq[String]): String = {
+    val dir = Files.createTempDirectory("graft_ids")
+    val paths = ids.map(id => writeReport(dir, s"${id}_report.tsv", Seq(
+      "40.0\t400\t400\t0\t0\t0\t0\tunclassified\tunclassified",
+      "60.0\t600\t600\t50\t0\t0\t1\troot\troot",
+      "0.1\t5\t5\t10\t1.0\t0.5\t10\tspecies\tEscherichia coli")))
+    val out = Files.createTempDirectory("graft_ids_out").toString
+    BigBugData.write(spark, BigBugData.Params(paths, out, nTophits = 2))
+    out
+  }
+
+  private def lines(path: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Files.readAllLines(java.nio.file.Paths.get(path)).asScala.toSeq
+  }
+
+  test("sample ids are the file names as spelled: spaces, '%' and '+' " +
+      "survive the scan (F5)") {
+    val ids = Seq("Sample 1", "Sample 2", "p%1", "a+b", "S`3")
+    val out = writeBatch(ids)
+    val header = "taxID,taxName,Total # of Reads,S`3,Sample 1,Sample 2,a+b,p%1"
+    assert(lines(s"$out/combined_species.csv") ==
+      Seq(header, "10,Escherichia coli,25,5,5,5,5,5"))
+    assert(lines(s"$out/rrpm_species.csv").head == header)
+    assert(lines(s"$out/tophits_species.csv").tail.map(_.split(",")(0)) ==
+      Seq("S`3", "Sample 1", "Sample 2", "a+b", "p%1"))
+  }
+
+  test("CSV sinks take sample ids verbatim: a dot or a backtick in an id " +
+      "is not SQL syntax (K1)") {
+    val out = writeBatch(Seq("S.1", "S.2"))
+    val header = "taxID,taxName,Total # of Reads,S.1,S.2"
+    assert(lines(s"$out/combined_species.csv") ==
+      Seq(header, "10,Escherichia coli,10,5,5"))
+    assert(lines(s"$out/rrpm_species.csv").head == header)
+    assert(lines(s"$out/tophits_species.csv").tail.map(_.split(",")(0)) ==
+      Seq("S.1", "S.2"))
+    val s2 = spark; import s2.implicits._
+    val target = Files.createTempDirectory("graft_ids_sink").resolve("o.csv")
+    graft.io.CsvSink.writeSingleCsv(Seq(("x", "y")).toDF("a`b", "c.d"),
+      Seq("c.d", "a`b"), target.toString)
+    assert(lines(target.toString) == Seq("c.d,a`b", "y,x"))
+  }
+
+  test("a second write over the same inputs compiles almost no code: " +
+      "generated classes stay cached across runs (SparkEnv)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def run(): Long = {
+      val n0 = compiles
+      BigBugData.write(spark, BigBugData.Params(
+        reportPaths = fixture._2,
+        resultsDir = Files.createTempDirectory("graft_warm_out").toString,
+        rank = "species", nTophits = 2,
+        groupPatterns = Seq(("Negative", "CF_DNA"))))
+      compiles - n0
+    }
+    run()
+    val second = run()
+    // a write needs ~140 classes; with Spark's default 100-entry cache
+    // the second write recompiled nearly all of them
+    assert(second <= 20, s"second write compiled $second classes")
+  }
+
   test("parquet sink strategy writes the long grids losslessly (content " +
       "== the combined/rrpm frames; no CSV files produced)") {
     val params = BigBugData.Params(

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.BigBugData
 
 /** Stress driver for the reference pipeline at a scale the reference's
@@ -29,8 +28,8 @@ object StressPipeline {
     // fitting and ENOSPC).
     // SparkEnv resolves the SPARK_GRAFT_MASTER/_JARS overrides for the
     // cross-executor gate (CORRECTNESS_CLUSTER.md)
-    val spark = graft.SparkEnv.builder("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkEnv.builder(s"local[${SparkEnv.cpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEnv.cpus)
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
       .config("spark.cleaner.periodicGC.interval", "60s")
